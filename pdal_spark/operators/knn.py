@@ -55,6 +55,21 @@ def _with_cell(df: DataFrame, cell_size: float, x: str, y: str) -> DataFrame:
 AUTO_SALT_FLOOR = 65_536
 
 
+def _cell_runs(cx, cy) -> dict:
+    """{(cx, cy): (start, end)} of each run of equal cells in cell-sorted
+    coordinate arrays."""
+    import numpy as np
+
+    if not len(cx):
+        return {}
+    edge = np.flatnonzero((np.diff(cx) != 0) | (np.diff(cy) != 0)) + 1
+    starts = np.concatenate(([0], edge))
+    ends = np.concatenate((edge, [len(cx)]))
+    return {(a, b): (lo, hi) for a, b, lo, hi in zip(
+        cx[starts].tolist(), cy[starts].tolist(),
+        starts.tolist(), ends.tolist())}
+
+
 #: block edge in cells for the kernel kNN — candidates replicate into a
 #: 1-cell halo around each (BLOCK x BLOCK)-cell block, so the per-point
 #: replication factor is (BLOCK+2)^2/BLOCK^2 (~1.6x at 8) instead of the
@@ -94,10 +109,10 @@ def knn_join(
     candidates replicate into the 1-cell halo of each BLOCK x BLOCK
     cell block (the SMRF tiled-halo pattern), one cogroup shuffle
     brings each block's srcs and halo candidates together, and a
-    vectorized numpy kernel emits exactly k rows per src — masked to
-    the src's own 3x3 cell neighborhood so results match the pairwise
-    plan bit for bit. Shuffle volume drops from O(pairs) to
-    O(1.6 x points); there is no window.
+    vectorized numpy kernel emits exactly k rows per src. It computes
+    one dense block per src cell against that cell's own 3x3 candidate
+    cells only, so results match the pairwise plan bit for bit. Shuffle
+    volume drops from O(pairs) to O(1.6 x points); there is no window.
 
     Skew: blocks whose SRC population exceeds salt_threshold split
     their srcs over n_salts sub-groups and replicate the block's
@@ -206,53 +221,77 @@ def knn_join(
     kk = int(k)
     excl = bool(exclude_self)
 
+    def top_k(d2: np.ndarray) -> np.ndarray:
+        """Column indices of each row's k smallest d2, ordered by
+        (d2, column); columns are in cand_id order, so that is the
+        pairwise plan's (distance, cand_id) rank."""
+        if d2.shape[1] <= kk:
+            return np.argsort(d2, axis=1, kind="stable")
+        part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
+        kth = np.take_along_axis(d2, part[:, kk - 1:], axis=1)
+        # argpartition picks an arbitrary member of a tie at the kth
+        # distance; such rows (and rows with < k finite distances) rank
+        # their whole row with the stable sort instead
+        redo = ~np.isfinite(kth[:, 0]) | ((d2 <= kth).sum(axis=1) > kk)
+        part.sort(axis=1)
+        vals = np.take_along_axis(d2, part, axis=1)
+        top = np.take_along_axis(
+            part, np.argsort(vals, axis=1, kind="stable"), axis=1)
+        if redo.any():
+            top[redo] = np.argsort(d2[redo], axis=1, kind="stable")[:, :kk]
+        return top
+
     def kernel(key, spdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(spdf) or not len(cpdf):
             return pd.DataFrame(
                 {f.name: pd.Series(dtype="object") for f in out_schema}
             )
-        # stable candidate order by id => stable argsort tie-breaks by id
+        # candidates in cand_id order; `by_cell` lists their positions
+        # grouped by cell, so each cell's candidates are one run
         cpdf = cpdf.sort_values(cand_id, kind="stable")
         cxv = cpdf["_cxv"].to_numpy(np.float64)
         cyv = cpdf["_cyv"].to_numpy(np.float64)
         ccx = cpdf["_cx"].to_numpy(np.int64)
         ccy = cpdf["_cy"].to_numpy(np.int64)
         cids = cpdf[cand_id].to_numpy()
+        by_cell = np.lexsort((ccy, ccx))
+        cruns = _cell_runs(ccx[by_cell], ccy[by_cell])
         sxv = spdf[x].to_numpy(np.float64)
         syv = spdf[y].to_numpy(np.float64)
         scx = spdf["_cx"].to_numpy(np.int64)
         scy = spdf["_cy"].to_numpy(np.int64)
         sids = spdf[src_id].to_numpy()
+        s_by_cell = np.lexsort((scy, scx))
         out_s, out_c, out_d, out_r = [], [], [], []
-        chunk = max(1, (4 << 20) // max(len(cpdf), 1))  # ~32MB f64 matrix
-        for lo in range(0, len(spdf), chunk):
-            hi = min(lo + chunk, len(spdf))
-            dx = sxv[lo:hi, None] - cxv[None, :]
-            dy = syv[lo:hi, None] - cyv[None, :]
-            d2 = dx * dx + dy * dy
-            # restrict to the src's own 3x3 cell neighborhood — the
-            # contract (and the driver oracle) is neighborhood-kNN
-            nb = (
-                (np.abs(scx[lo:hi, None] - ccx[None, :]) <= 1)
-                & (np.abs(scy[lo:hi, None] - ccy[None, :]) <= 1)
-            )
-            if excl:
-                nb &= sids[lo:hi, None] != cids[None, :]
-            d2 = np.where(nb, d2, np.inf)
-            # stable argsort => ties broken by candidate id (pre-sorted)
-            order = np.argsort(d2, axis=1, kind="stable")[:, :kk]
-            dsel = np.take_along_axis(d2, order, axis=1)
-            valid = np.isfinite(dsel)
-            nv = valid.sum(axis=1)
-            rows = np.repeat(np.arange(hi - lo), nv)
-            flat_ord = order[valid]
-            out_s.append(np.repeat(sids[lo:hi], nv))
-            out_c.append(cids[flat_ord])
-            out_d.append(np.sqrt(dsel[valid]))
-            ranks = np.concatenate(
-                [np.arange(1, n + 1) for n in nv]
-            ) if len(rows) else np.empty(0, dtype=np.int64)
-            out_r.append(ranks)
+        # one dense block per source cell against its own 3x3 cells
+        for (cx, cy), (slo, shi) in _cell_runs(
+                scx[s_by_cell], scy[s_by_cell]).items():
+            runs = [by_cell[a:b] for a, b in (
+                cruns.get((cx + ox, cy + oy), (0, 0))
+                for ox, oy in NEIGHBOR_OFFSETS
+            ) if b]
+            if not runs:
+                continue
+            cols = np.sort(np.concatenate(runs))  # back to cand_id order
+            nxv, nyv, nids = cxv[cols], cyv[cols], cids[cols]
+            chunk = max(1, (4 << 20) // len(cols))  # ~32MB f64 matrix
+            for lo in range(slo, shi, chunk):
+                rows = s_by_cell[lo:min(lo + chunk, shi)]
+                dx = sxv[rows, None] - nxv[None, :]
+                dy = syv[rows, None] - nyv[None, :]
+                d2 = dx * dx + dy * dy
+                if excl:
+                    d2[sids[rows, None] == nids[None, :]] = np.inf
+                top = top_k(d2)
+                dsel = np.take_along_axis(d2, top, axis=1)
+                # finite distances sort first, so each row's valid
+                # entries are a prefix and rank = position + 1
+                valid = np.isfinite(dsel)
+                out_s.append(np.repeat(sids[rows], valid.sum(axis=1)))
+                out_c.append(nids[top[valid]])
+                out_d.append(np.sqrt(dsel[valid]))
+                out_r.append(np.broadcast_to(
+                    np.arange(1, top.shape[1] + 1), top.shape)[valid])
         return pd.DataFrame({
             src_id: np.concatenate(out_s) if out_s else [],
             cand_id: np.concatenate(out_c) if out_c else [],

@@ -688,8 +688,9 @@ def merge(
     writer_options: dict | None = None,
 ) -> DataFrame:
     """``pdal merge in1 in2 ... out`` (kernels/MergeKernel.cpp:73-90):
-    N inferred readers -> merge -> inferred writer."""
-    if len(input_paths) < 2:
+    N inferred readers -> merge -> inferred writer. Like the reference,
+    one input plus the output is enough."""
+    if len(input_paths) < 1:
         raise PipelineError("Must specify an input and output file.")
     doc: list = [
         {"type": "readers.infer", "filename": p} for p in input_paths
@@ -797,6 +798,20 @@ def _w_null(spark, inputs, o, filename):
     return df
 
 
+def _las_compression(value) -> bool:
+    """writers.las ``compression``: the reference's LasCompression names
+    ("none", "laszip", "lazperf", any case) plus JSON booleans and their
+    string forms; "none", "false" and "" mean uncompressed LAS."""
+    if isinstance(value, bool):
+        return value
+    name = str(value).strip().lower()
+    if name in ("none", "false", ""):
+        return False
+    if name in ("laszip", "lazperf", "true"):
+        return True
+    raise PipelineError(f"writers.las: invalid compression {value!r}")
+
+
 def _w_las(spark, inputs, o, filename):
     """writers.las (io/LasWriter.cpp): single-file LAS with summary
     header; scale/offset options mirror the reference's
@@ -821,7 +836,7 @@ def _w_las(spark, inputs, o, filename):
         ),
         # a .laz filename implies compression, like the reference
         # (LasWriter infers laszip output from the extension)
-        compression=bool(o.get("compression", False))
+        compression=_las_compression(o.get("compression", False))
         or (filename or o["filename"]).endswith(".laz"),
     )
     return df

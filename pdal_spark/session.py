@@ -5,6 +5,22 @@ AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized
 to cores (not the 200 default), Arrow enabled for every pandas-UDF
 boundary, UTC session timezone so timestamp semantics match columnar
 files and external oracles bit-for-bit.
+
+Python workers start from ``pdal_spark._workerd`` instead of
+``pyspark.daemon``. At the start of every task PySpark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``.
+Since Python 3.10 that makes every ``zipimport.zipimporter`` on the
+worker's path re-read its archive's whole directory (a dozen importers
+over ``pyspark.zip``, more over the py4j zip and the ``spark-core`` jar),
+a fixed ~0.15 s per task before any row moves. The daemon makes
+``zipimporter.invalidate_caches`` a no-op, the Python <= 3.9 behaviour.
+That is safe because the archives on a worker's path do not change while
+the worker lives, and a zip added later with ``addPyFile`` is a new path
+whose importer reads its directory when it is created. ``FileFinder``
+invalidation, which sees new plain files, is left as it is.
+
+The daemon module is a static conf: a session built elsewhere and handed
+in (``configure_session``) keeps the stock daemon and its per-task cost.
 """
 
 from __future__ import annotations
@@ -47,7 +63,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("PDAL_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    # the daemon module must import from any working directory
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = extra.pop("spark.executorEnv.PYTHONPATH", "")
+    builder = (
+        builder.config("spark.python.daemon.module", "pdal_spark._workerd")
+        .config("spark.executorEnv.PYTHONPATH",
+                os.pathsep.join(p for p in (root, pythonpath) if p))
+    )
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -202,33 +202,74 @@ def test_hausdorff_and_delta(spark_dfs, pts):
         assert row[sid] == pytest.approx(np.sqrt(d2[i].min()), rel=1e-12)
 
 
-def test_kernel_equals_pairwise_plan(spark):
+def test_kernel_equals_pairwise_plan(spark, monkeypatch):
     """The cogroup-kernel knn_join and the materialized-pair window plan
     (knn_join_pairwise) return identical rows — including duplicate
-    coordinates (tie-breaks), self-exclusion, and hot-cell salting."""
+    coordinates (tie-breaks), self-exclusion, hot-cell salting, negative
+    coordinates, sources with fewer than k neighbours, equal kth-rank
+    distances split across two cells, and k=1."""
     import random
 
-    import os
+    # the small-input gate would route these tiny frames to the pairwise
+    # plan and the comparison would be vacuous — pin the kernel shape
+    monkeypatch.setenv("PDAL_SPARK_FORCE_DISTRIBUTED", "1")
+
+    def both(pts, k, **kw):
+        src = spark.createDataFrame(pts, "src_id long, x double, y double")
+        cand = spark.createDataFrame(pts, "cand_id long, x double, y double")
+        a = sorted(map(tuple, K.knn_join(
+            src, cand, k, cell_size=30.0, n_salts=3, **kw).collect()))
+        b = sorted(map(tuple, K.knn_join_pairwise(
+            src, cand, k, cell_size=30.0, n_salts=3, **kw).collect()))
+        assert a == b, (k, kw)
+        return a
 
     rng = random.Random(99)
     pts = [(i, rng.uniform(0, 300), rng.uniform(0, 300))
            for i in range(800)]
     pts += [(10_000 + i, 150.0, 150.0) for i in range(20)]  # exact ties
-    src = spark.createDataFrame(pts, "src_id long, x double, y double")
-    cand = spark.createDataFrame(
-        [(i, xx, yy) for i, xx, yy in pts],
-        "cand_id long, x double, y double")
-    # the small-input gate would route this tiny frame to the pairwise
-    # plan and the comparison would be vacuous — pin the kernel shape
-    os.environ["PDAL_SPARK_FORCE_DISTRIBUTED"] = "1"
-    try:
-        for excl, thr in [(False, None), (True, None), (False, 5)]:
-            a = sorted(map(tuple, K.knn_join(
-                src, cand, 4, cell_size=30.0, exclude_self=excl,
-                salt_threshold=thr, n_salts=3).collect()))
-            b = sorted(map(tuple, K.knn_join_pairwise(
-                src, cand, 4, cell_size=30.0, exclude_self=excl,
-                salt_threshold=thr, n_salts=3).collect()))
-            assert a == b, (excl, thr)
-    finally:
-        os.environ.pop("PDAL_SPARK_FORCE_DISTRIBUTED", None)
+    for excl, thr in [(False, None), (True, None), (False, 5)]:
+        both(pts, 4, exclude_self=excl, salt_threshold=thr)
+
+    # negative coordinates (floor, not truncation, picks the cell), with
+    # a salted hot block and exact duplicates
+    neg = [(5_000 + i, rng.uniform(-300, 0), rng.uniform(-150, 150))
+           for i in range(600)]
+    neg += [(20_000 + i, -45.0, -15.0) for i in range(12)]
+    both(neg, 4, exclude_self=True, salt_threshold=None)
+    both(neg, 4, exclude_self=True, salt_threshold=5)
+
+    # sparse: most sources have fewer than k candidates in their 3x3 cells
+    sparse = [(i, rng.uniform(-2000, 2000), rng.uniform(-2000, 2000))
+              for i in range(40)]
+    sparse += [(100 + i, 500.0 + i, 500.0) for i in range(3)]
+    rows = both(sparse, 5, exclude_self=True, salt_threshold=None)
+    assert {r[3] for r in rows if r[0] == 100} == {1, 2}
+
+    # the kth-rank distance is tied between candidates in two cells, and
+    # the smaller cand_id sits in the cell that comes later: src 1 at
+    # x=29.5 has 3 @ 0.25, then 9 (cell 0) and 2 (cell 1) both @ 0.5
+    tie = [(1, 29.5, 15.0), (3, 29.5, 15.25), (9, 29.0, 15.0),
+           (2, 30.0, 15.0), (5, 29.5, 16.0), (4, 28.5, 15.0),
+           (6, 31.5, 15.0), (7, -0.5, -0.5), (8, 0.5, 0.5)]
+    rows = both(tie, 2, exclude_self=True, salt_threshold=None)
+    assert sorted((r[3], r[1]) for r in rows if r[0] == 1) == [(1, 3), (2, 2)]
+    # k=1: a rank-1 tie across cells (src 1 without 3), and a tie at the
+    # origin corner between cells (-1,-1) and (0,0)
+    rows = both([p for p in tie if p[0] != 3], 1, exclude_self=True,
+                salt_threshold=None)
+    assert [(r[3], r[1]) for r in rows if r[0] == 1] == [(1, 2)]
+    both(pts + neg, 1, exclude_self=True, salt_threshold=5)
+
+    # twelve candidates at exactly distance 5 around the origin, spread
+    # over four cells, with ids in no spatial order: the whole top k=12
+    # is one tie (no tie AT the kth rank beyond it), ranked by cand_id
+    ring = [(5, 0), (-5, 0), (0, 5), (0, -5), (3, 4), (-3, 4), (3, -4),
+            (-3, -4), (4, 3), (-4, 3), (4, -3), (-4, -3)]
+    ids = rng.sample(range(600, 700), len(ring))
+    pts = [(500, 0.0, 0.0)] + [
+        (i, float(a), float(b)) for i, (a, b) in zip(ids, ring)]
+    pts += [(700 + j, 7.0 * (j % 3 - 1), 7.5 + j) for j in range(9)]
+    rows = both(pts, 12, exclude_self=True, salt_threshold=None)
+    assert [c for _, c in sorted((r[3], r[1]) for r in rows
+                                 if r[0] == 500)] == sorted(ids)

@@ -259,7 +259,7 @@ def test_kernel_merge(spark, tmp_path):
     pl.merge(spark, [SIMPLE_LAS, SIMPLE_LAS], out)
     assert read_las(spark, out).count() == 2130
     with pytest.raises(pl.PipelineError):
-        pl.merge(spark, [SIMPLE_LAS], str(tmp_path / "x.las"))
+        pl.merge(spark, [], str(tmp_path / "x.las"))
 
 
 @needs_simple
@@ -281,6 +281,50 @@ def test_kernel_sort_morton_laz(spark, tmp_path):
     b = sorted(map(tuple, read_las(spark, SIMPLE_LAS)
                    .select("x", "y", "z").collect()))
     assert a == b  # same point set, reordered
+
+
+def test_kernel_merge_one_input(spark, tmp_path):
+    """MergeKernel takes one input plus the output (it only needs two
+    positional files in all); zero inputs is still an error."""
+    from pdal_spark.formats.las import read_las
+
+    src = str(tmp_path / "in.las")
+    pl.random(spark, src, count=50)
+    out = str(tmp_path / "merged.las")
+    pl.merge(spark, [src], out)
+    key = ["x", "y", "z"]
+    assert (sorted(map(tuple, read_las(spark, out).select(key).collect()))
+            == sorted(map(tuple, read_las(spark, src).select(key).collect())))
+    with pytest.raises(pl.PipelineError, match="input and output"):
+        pl.merge(spark, [], str(tmp_path / "x.las"))
+
+
+@pytest.mark.parametrize("value,compressed", [
+    ("none", False), ("false", False), ("laszip", True), (True, True)])
+def test_writers_las_compression_values(spark, tmp_path, value, compressed):
+    """writers.las compression: the strings "none" and "false" write
+    plain LAS; "laszip" and JSON true write LAZ (point-format byte's
+    high bit, LasHeader.cpp:352-355)."""
+    from pdal_spark.formats.las import read_las
+
+    out = str(tmp_path / "out.las")
+    pl.run(spark, [
+        {"type": "readers.faux", "count": 30},
+        {"type": "filters.ferry", "dimensions": "x=>z"},
+        {"type": "writers.las", "filename": out, "compression": value},
+    ])
+    assert bool(open(out, "rb").read()[104] & 0x80) == compressed
+    assert read_las(spark, out).count() == 30
+
+
+def test_writers_las_compression_rejects_unknown(spark, tmp_path):
+    with pytest.raises(pl.PipelineError, match="invalid compression"):
+        pl.run(spark, [
+            {"type": "readers.faux", "count": 3},
+            {"type": "filters.ferry", "dimensions": "x=>z"},
+            {"type": "writers.las", "filename": str(tmp_path / "o.las"),
+             "compression": "zip"},
+        ])
 
 
 def test_kernel_random(spark, tmp_path):
