@@ -395,6 +395,27 @@ def _meridian_arc(c: dict, phi0: float) -> float:
         + c["m4"] * math.sin(4.0 * phi0) - c["m6"] * math.sin(6.0 * phi0))
 
 
+def _arc(B, c: dict, phi):
+    """Meridian arc length M(phi), Snyder 3-21."""
+    return B.lit(c["a"]) * (
+        B.lit(c["m0"]) * phi
+        - B.lit(c["m2"]) * B.sin(phi * B.lit(2.0))
+        + B.lit(c["m4"]) * B.sin(phi * B.lit(4.0))
+        - B.lit(c["m6"]) * B.sin(phi * B.lit(6.0)))
+
+
+def _footpoint(B, c: dict, mu):
+    """Footpoint latitude from the rectifying latitude mu, Snyder 3-26."""
+    e1 = c["e1"]
+    return (mu
+            + B.lit(3.0 * e1 / 2.0 - 27.0 * e1**3 / 32.0)
+            * B.sin(mu * B.lit(2.0))
+            + B.lit(21.0 * e1**2 / 16.0 - 55.0 * e1**4 / 32.0)
+            * B.sin(mu * B.lit(4.0))
+            + B.lit(151.0 * e1**3 / 96.0) * B.sin(mu * B.lit(6.0))
+            + B.lit(1097.0 * e1**4 / 512.0) * B.sin(mu * B.lit(8.0)))
+
+
 def _tmerc(B, p, x, y, z, inverse):
     """General transverse Mercator (+proj=tmerc: lon_0/lat_0/k/x_0/y_0)
     — the same Snyder series as utm with free parameters; a nonzero
@@ -436,11 +457,7 @@ def _tmerc_core(B, x, y, z, inverse, c, lon0, m_at_lat0, k0, fe, fn):
         t = tan_p * tan_p
         cc = B.lit(c["ep2"]) * cos_p * cos_p
         a_ = (lam - B.lit(lon0)) * cos_p
-        m = B.lit(a) * (
-            B.lit(c["m0"]) * phi
-            - B.lit(c["m2"]) * B.sin(phi * B.lit(2.0))
-            + B.lit(c["m4"]) * B.sin(phi * B.lit(4.0))
-            - B.lit(c["m6"]) * B.sin(phi * B.lit(6.0)))
+        m = _arc(B, c, phi)
         e = B.lit(fe) + B.lit(k0) * nr * (
             a_
             + (B.lit(1.0) - t + cc) * a_**3 / B.lit(6.0)
@@ -459,16 +476,9 @@ def _tmerc_core(B, x, y, z, inverse, c, lon0, m_at_lat0, k0, fe, fn):
             B.abs(phi) < B.lit(math.radians(85.5)))
         return e, n, z, ok
 
-    e1 = c["e1"]
     m = (y - B.lit(fn)) / B.lit(k0) + B.lit(m_at_lat0)
     mu = m / B.lit(a * c["m0"])
-    phi1 = (mu
-            + B.lit(3.0 * e1 / 2.0 - 27.0 * e1**3 / 32.0)
-            * B.sin(mu * B.lit(2.0))
-            + B.lit(21.0 * e1**2 / 16.0 - 55.0 * e1**4 / 32.0)
-            * B.sin(mu * B.lit(4.0))
-            + B.lit(151.0 * e1**3 / 96.0) * B.sin(mu * B.lit(6.0))
-            + B.lit(1097.0 * e1**4 / 512.0) * B.sin(mu * B.lit(8.0)))
+    phi1 = _footpoint(B, c, mu)
     sin1, cos1, tan1 = B.sin(phi1), B.cos(phi1), B.tan(phi1)
     c1 = B.lit(c["ep2"]) * cos1 * cos1
     t1 = tan1 * tan1
@@ -541,8 +551,9 @@ def _merc(B, p, x, y, z, inverse):
                    / (B.lit(1.0) + B.lit(e) * sin_p)) ** B.lit(e / 2.0))
         mx = B.lit(fe) + lam * B.lit(ak)
         my = B.lit(fn) - B.lit(ak) * ln_t
-        ok = B.both(phi > B.lit(-_WEBMERC_MAX_LAT),
-                    phi < B.lit(_WEBMERC_MAX_LAT))
+        # ln t diverges only at the poles; PROJ transforms everything
+        # short of them, so the square-world webmerc cutoff does not apply
+        ok = B.abs(phi) < B.lit(math.pi / 2.0)
         return mx, my, z, ok
 
     lam = (x - B.lit(fe)) / B.lit(ak)
@@ -552,35 +563,41 @@ def _merc(B, p, x, y, z, inverse):
         return lam, phi, z, None
     t = B.exp((B.lit(fn) - y) / B.lit(ak))
     chi = B.lit(math.pi / 2.0) - B.atan(t) * B.lit(2.0)
-    s2 = (e2 / 2.0 + 5.0 * e2**2 / 24.0 + e2**3 / 12.0
-          + 13.0 * e2**4 / 360.0)
-    s4 = 7.0 * e2**2 / 48.0 + 29.0 * e2**3 / 240.0 + 811.0 * e2**4 / 11520.0
-    s6 = 7.0 * e2**3 / 120.0 + 81.0 * e2**4 / 1120.0
-    s8 = 4279.0 * e2**4 / 161280.0
-    phi = (chi + B.lit(s2) * B.sin(chi * B.lit(2.0))
-           + B.lit(s4) * B.sin(chi * B.lit(4.0))
-           + B.lit(s6) * B.sin(chi * B.lit(6.0))
-           + B.lit(s8) * B.sin(chi * B.lit(8.0)))
-    return lam, phi, z, None
+    return lam, _conformal_series(B, e2, chi), z, None
 
 
 def _lcc(B, p, x, y, z, inverse):
-    """Lambert conformal conic 2SP (+proj=lcc: lat_1/lat_2/lat_0/
-    lon_0/x_0/y_0).  Forward: Snyder 15-1..15-10 via the shared
-    LccParams constants (operators/reprojection.py).  Inverse: Snyder
-    15-9..15-11 + the closed-form conformal-latitude series (Snyder
-    3-5).  Radian-native."""
-    from pdal_spark.operators.reprojection import LccParams
-
+    """Lambert conformal conic (+proj=lcc: lat_1/lat_2/lat_0/lon_0/
+    x_0/y_0; lat_2 defaults to lat_1, the tangent 1SP cone).  Forward:
+    Snyder 15-1..15-10, with n, F and rho0 computed once here and baked
+    as literals.  Inverse: Snyder 15-9..15-11 + the closed-form
+    conformal-latitude series (Snyder 3-5).  Radian-native."""
     a, e2 = _ellps(p)
+    e = math.sqrt(e2)
+
+    def m_of(phi):
+        s = math.sin(phi)
+        return math.cos(phi) / math.sqrt(1.0 - e2 * s * s)
+
+    def t_of(phi):
+        s = math.sin(phi)
+        return math.tan(math.pi / 4.0 - phi / 2.0) / (
+            (1.0 - e * s) / (1.0 + e * s)) ** (e / 2.0)
+
     lat1 = float(p.get("lat_1", 0.0))
     lat2 = float(p.get("lat_2", lat1))
-    lp = LccParams(lat1, lat2, float(p.get("lat_0", 0.0)),
-                   float(p.get("lon_0", 0.0)),
-                   float(p.get("x_0", 0.0)), float(p.get("y_0", 0.0)),
-                   a=a, e2=e2)
-    n, e, lon0 = lp.n, lp.e, math.radians(lp.lon0)
-    af = a * lp.big_f
+    p1, p2, p0 = (math.radians(v)
+                  for v in (lat1, lat2, float(p.get("lat_0", 0.0))))
+    m1, t1 = m_of(p1), t_of(p1)
+    if abs(p1 - p2) > 1e-12:
+        n = ((math.log(m1) - math.log(m_of(p2)))
+             / (math.log(t1) - math.log(t_of(p2))))
+    else:
+        n = math.sin(p1)  # Snyder 15-4, tangent cone
+    af = a * (m1 / (n * t1 ** n))
+    rho0 = af * t_of(p0) ** n
+    lon0 = math.radians(float(p.get("lon_0", 0.0)))
+    fe, fn = float(p.get("x_0", 0.0)), float(p.get("y_0", 0.0))
     sgn = 1.0 if n >= 0 else -1.0
 
     if not inverse:
@@ -591,31 +608,21 @@ def _lcc(B, p, x, y, z, inverse):
             / (B.lit(1.0) + B.lit(e) * sin_p)) ** B.lit(e / 2.0)
         rho = B.lit(af) * t ** B.lit(n)
         theta = B.lit(n) * (lam - B.lit(lon0))
-        xe = B.lit(lp.fe) + rho * B.sin(theta)
-        yn = B.lit(lp.fn) + B.lit(lp.rho0) - rho * B.cos(theta)
+        xe = B.lit(fe) + rho * B.sin(theta)
+        yn = B.lit(fn) + B.lit(rho0) - rho * B.cos(theta)
         ok = B.both(
-            B.abs(lam - B.lit(lon0)) < B.lit(math.radians(60.0)),
-            B.abs(phi) < B.lit(math.radians(89.0)))
+            B.abs(lam - B.lit(lon0)) < B.lit(math.radians(90.0)),
+            B.abs(phi) < B.lit(math.radians(89.5)))
         return xe, yn, z, ok
 
-    dx = (x - B.lit(lp.fe)) * B.lit(sgn)
-    dy = (B.lit(lp.rho0) - (y - B.lit(lp.fn))) * B.lit(sgn)
+    dx = (x - B.lit(fe)) * B.lit(sgn)
+    dy = (B.lit(rho0) - (y - B.lit(fn))) * B.lit(sgn)
     rho = B.sqrt(dx * dx + dy * dy) * B.lit(sgn)
     theta = B.atan2(dx, dy)
     lam = theta / B.lit(n) + B.lit(lon0)
     t = (rho / B.lit(af)) ** B.lit(1.0 / n)
     chi = B.lit(math.pi / 2.0) - B.atan(t) * B.lit(2.0)
-    # conformal -> geodetic latitude, Snyder 3-5 series in e^2
-    s2 = (e2 / 2.0 + 5.0 * e2**2 / 24.0 + e2**3 / 12.0
-          + 13.0 * e2**4 / 360.0)
-    s4 = 7.0 * e2**2 / 48.0 + 29.0 * e2**3 / 240.0 + 811.0 * e2**4 / 11520.0
-    s6 = 7.0 * e2**3 / 120.0 + 81.0 * e2**4 / 1120.0
-    s8 = 4279.0 * e2**4 / 161280.0
-    phi = (chi + B.lit(s2) * B.sin(chi * B.lit(2.0))
-           + B.lit(s4) * B.sin(chi * B.lit(4.0))
-           + B.lit(s6) * B.sin(chi * B.lit(6.0))
-           + B.lit(s8) * B.sin(chi * B.lit(8.0)))
-    return lam, phi, z, None
+    return lam, _conformal_series(B, e2, chi), z, None
 
 
 def _conformal_series(B, e2: float, chi):
@@ -644,6 +651,14 @@ def _eqc(B, p, x, y, z, inverse):
                 B.lit(fn) + y * B.lit(a), z, None)
     return ((x - B.lit(fe)) / B.lit(k) + B.lit(lon0),
             (y - B.lit(fn)) / B.lit(a), z, None)
+
+
+def _wrap_lon(B, lam):
+    """Longitude into (-pi, pi].  One turn is enough for lon_0 plus an
+    atan2 angle; in-range values pass through bit-unchanged."""
+    turn = B.lit(2.0 * math.pi)
+    return B.where(lam > B.lit(math.pi), lam - turn,
+                   B.where(lam <= B.lit(-math.pi), lam + turn, lam))
 
 
 def _stere(B, p, x, y, z, inverse):
@@ -702,7 +717,7 @@ def _stere(B, p, x, y, z, inverse):
     lam = B.lit(-lon0 if south else lon0) + B.atan2(dx, -dy)
     if south:
         lam, phi = -lam, -phi
-    return lam, phi, z, None
+    return _wrap_lon(B, lam), phi, z, None
 
 
 def _sinu(B, p, x, y, z, inverse):
@@ -722,24 +737,13 @@ def _sinu(B, p, x, y, z, inverse):
         sin_p = B.sin(phi)
         w = B.sqrt(B.lit(1.0) - B.lit(e2) * sin_p * sin_p)
         xe = B.lit(fe) + B.lit(a) * (lam - B.lit(lon0)) * B.cos(phi) / w
-        m = B.lit(a) * (
-            B.lit(c["m0"]) * phi
-            - B.lit(c["m2"]) * B.sin(phi * B.lit(2.0))
-            + B.lit(c["m4"]) * B.sin(phi * B.lit(4.0))
-            - B.lit(c["m6"]) * B.sin(phi * B.lit(6.0)))
+        m = _arc(B, c, phi)
         yn = B.lit(fn) + m
         ok = B.abs(phi) < B.lit(math.radians(89.9))
         return xe, yn, z, ok
 
-    e1 = c["e1"]
     mu = (y - B.lit(fn)) / B.lit(a * c["m0"])
-    phi = (mu
-           + B.lit(3.0 * e1 / 2.0 - 27.0 * e1**3 / 32.0)
-           * B.sin(mu * B.lit(2.0))
-           + B.lit(21.0 * e1**2 / 16.0 - 55.0 * e1**4 / 32.0)
-           * B.sin(mu * B.lit(4.0))
-           + B.lit(151.0 * e1**3 / 96.0) * B.sin(mu * B.lit(6.0))
-           + B.lit(1097.0 * e1**4 / 512.0) * B.sin(mu * B.lit(8.0)))
+    phi = _footpoint(B, c, mu)
     sin_p = B.sin(phi)
     w = B.sqrt(B.lit(1.0) - B.lit(e2) * sin_p * sin_p)
     lam = B.lit(lon0) + (x - B.lit(fe)) * w / (B.lit(a) * B.cos(phi))

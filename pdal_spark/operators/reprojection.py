@@ -1,217 +1,39 @@
-"""filters.reprojection / filters.projpipeline — CRS transforms.
+"""filters.reprojection — EPSG codes resolved onto projpipeline coord_ops.
 
-Reference semantics (/root/reference/filters/ReprojectionFilter.cpp):
-  * transform (X, Y, Z) into out_srs; points whose transform FAILS are
-    DROPPED (processOne returns ok, :110-112, 118-133).
-  * the general GDAL/PROJ engine is out of sandbox scope (no pyproj);
-    the transform registry here ships the closed-form pairs a web-corpus
-    engine actually needs — lon/lat (EPSG:4326) <-> Web-Mercator
-    (EPSG:3857) — as pure Column math (public spherical-Mercator
-    formulas), plus a pluggable hook for vectorized pyproj kernels when
-    the library exists.
+Reference semantics (ReprojectionFilter.cpp:110-133): transform (X, Y)
+from in_srs into out_srs; points whose transform FAILS are DROPPED.
 
-Failure semantics for 4326->3857: |lat| >= the Mercator cutoff
-(atan(sinh(pi)) deg ~ 85.051129) diverges — those rows are dropped,
-matching the reference's drop-on-failure. The cutoff is exactly the
-Web-Mercator square's edge.
+There is no GDAL/PROJ here, so a CRS is a row of ``EPSG``: the PROJ
+operation that takes radian lon/lat to that grid, in the step
+vocabulary of operators/projpipeline.py.  One resolver turns an
+(in_srs, out_srs) pair with EPSG:4326 on one side into a
+``(coord_op, reverse_transfo)`` pair, and the three front ends run it
+on that module's Column, SQL and numpy backends.  The projection math
+and each family's drop guard therefore live in one place.  WGS 84 UTM
+zones (EPSG:326zz north, 327zz south) resolve without a table row.
 """
 
 from __future__ import annotations
 
-import math
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pdal_spark.operators.projpipeline import (pipeline_np, pipeline_sql,
+                                               projpipeline)
 
-R = 6378137.0  # WGS84 / spherical-Mercator radius
-MERC_MAX_LAT_DEG = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112878
-
-
-def _to_3857(x: Column, y: Column) -> tuple[Column, Column, Column]:
-    mx = x * F.lit(math.pi / 180.0) * F.lit(R)
-    my = F.log(F.tan(F.lit(math.pi / 4.0) + y * F.lit(math.pi / 360.0))) * F.lit(R)
-    ok = (y > F.lit(-MERC_MAX_LAT_DEG)) & (y < F.lit(MERC_MAX_LAT_DEG))
-    return mx, my, ok
-
-
-def _to_4326(x: Column, y: Column) -> tuple[Column, Column, Column]:
-    lon = x / F.lit(R) * F.lit(180.0 / math.pi)
-    lat = (
-        F.atan(F.exp(y / F.lit(R))) * F.lit(2.0) - F.lit(math.pi / 2.0)
-    ) * F.lit(180.0 / math.pi)
-    return lon, lat, F.lit(True)
-
-
-# --- WGS84 UTM (EPSG:326xx north / 327xx south) ----------------------------
-# Transverse-Mercator series (Snyder 1987, "Map Projections — A Working
-# Manual", eqs. 3-21, 8-9..8-15; public formulas). Pure Column math —
-# trig + polynomials in whole-stage codegen, ~0.1 mm series accuracy in
-# zone. Proves the transform-registry seam with a second real pair.
-
-_A_WGS84 = 6378137.0
-_F_WGS84 = 1.0 / 298.257223563
-_E2 = _F_WGS84 * (2.0 - _F_WGS84)
-_EP2 = _E2 / (1.0 - _E2)
-_K0 = 0.9996
-UTM_MAX_DLON_DEG = 45.0  # pragmatic series cutoff; out-of-range rows drop
-
-# meridian-arc series coefficients (Snyder eq. 3-21)
-_M0 = 1.0 - _E2 / 4.0 - 3.0 * _E2**2 / 64.0 - 5.0 * _E2**3 / 256.0
-_M2 = 3.0 * _E2 / 8.0 + 3.0 * _E2**2 / 32.0 + 45.0 * _E2**3 / 1024.0
-_M4 = 15.0 * _E2**2 / 256.0 + 45.0 * _E2**3 / 1024.0
-_M6 = 35.0 * _E2**3 / 3072.0
-
-
-def _utm_zone(out_srs: str) -> tuple[int, bool] | None:
-    """EPSG:326zz / EPSG:327zz -> (zone, is_north), else None."""
-    if not out_srs.startswith("EPSG:") or len(out_srs) != 10:
-        return None
-    code = out_srs[5:]
-    if code[:3] == "326":
-        north = True
-    elif code[:3] == "327":
-        north = False
-    else:
-        return None
-    zone = int(code[3:])
-    return (zone, north) if 1 <= zone <= 60 else None
-
-
-def _to_utm_factory(zone: int, north: bool):
-    lon0 = math.radians(-183.0 + 6.0 * zone)
-
-    def _to_utm(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam = x * F.lit(math.pi / 180.0)
-        phi = y * F.lit(math.pi / 180.0)
-        sin_p, cos_p, tan_p = F.sin(phi), F.cos(phi), F.tan(phi)
-        n_rad = F.lit(_A_WGS84) / F.sqrt(F.lit(1.0) - F.lit(_E2) * sin_p * sin_p)
-        t = tan_p * tan_p
-        c = F.lit(_EP2) * cos_p * cos_p
-        a_ = (lam - F.lit(lon0)) * cos_p
-        m = F.lit(_A_WGS84) * (
-            F.lit(_M0) * phi
-            - F.lit(_M2) * F.sin(phi * 2.0)
-            + F.lit(_M4) * F.sin(phi * 4.0)
-            - F.lit(_M6) * F.sin(phi * 6.0)
-        )
-        easting = F.lit(500000.0) + F.lit(_K0) * n_rad * (
-            a_
-            + (F.lit(1.0) - t + c) * a_**3 / 6.0
-            + (F.lit(5.0) - t * 18.0 + t * t + c * 72.0 - F.lit(58.0 * _EP2))
-            * a_**5 / 120.0
-        )
-        northing = F.lit(0.0 if north else 10000000.0) + F.lit(_K0) * (
-            m
-            + n_rad * tan_p * (
-                a_**2 / 2.0
-                + (F.lit(5.0) - t + c * 9.0 + c * c * 4.0) * a_**4 / 24.0
-                + (F.lit(61.0) - t * 58.0 + t * t + c * 600.0
-                   - F.lit(330.0 * _EP2)) * a_**6 / 720.0
-            )
-        )
-        dlon = x - F.lit(math.degrees(lon0))
-        ok = (
-            (F.abs(dlon) < F.lit(UTM_MAX_DLON_DEG))
-            & (y > F.lit(-MERC_MAX_LAT_DEG)) & (y < F.lit(MERC_MAX_LAT_DEG))
-        )
-        return easting, northing, ok
-
-    return _to_utm
-
-
-# --- Lambert conformal conic, 2 standard parallels (ellipsoidal) -----------
-# Snyder 1987 eqs. 15-1..15-10 (public formulas) — the projection behind
-# many national grids (France Lambert-93 EPSG:2154, Statistics Canada
-# EPSG:3347, US State Plane zones). Registered instances carry their
-# EPSG parameter sets on GRS80 (a shared with WGS84; 1/f 298.257222101);
-# register_lcc() adds further zones without touching the engine — the
-# third real family through the transform-registry seam.
-
-_A_GRS80 = 6378137.0
-_F_GRS80 = 1.0 / 298.257222101
-_E2_GRS80 = _F_GRS80 * (2.0 - _F_GRS80)
-LCC_MAX_DLON_DEG = 90.0  # single-valued wrap cutoff; out-of-range drops
-LCC_MAX_LAT_DEG = 89.5   # t(phi) -> 0/inf at the poles
-
-
-class LccParams:
-    """EPSG-style 2SP parameter set (degrees / metres) + the derived
-    Snyder constants n, F, rho0 (computed once, baked as literals)."""
-
-    def __init__(self, lat1: float, lat2: float, lat0: float, lon0: float,
-                 fe: float, fn: float,
-                 a: float = _A_GRS80, e2: float = _E2_GRS80):
-        self.lat1, self.lat2, self.lat0, self.lon0 = lat1, lat2, lat0, lon0
-        self.fe, self.fn, self.a, self.e2 = fe, fn, a, e2
-        e = math.sqrt(e2)
-
-        def m(phi):
-            s = math.sin(phi)
-            return math.cos(phi) / math.sqrt(1.0 - e2 * s * s)
-
-        def t(phi):
-            s = math.sin(phi)
-            return math.tan(math.pi / 4.0 - phi / 2.0) / (
-                (1.0 - e * s) / (1.0 + e * s)
-            ) ** (e / 2.0)
-
-        p1, p2, p0 = (math.radians(v) for v in (lat1, lat2, lat0))
-        m1, m2 = m(p1), m(p2)
-        t1, t2, t0 = t(p1), t(p2), t(p0)
-        self.n = (math.log(m1) - math.log(m2)) / (math.log(t1) - math.log(t2))
-        self.big_f = m1 / (self.n * t1 ** self.n)
-        self.rho0 = a * self.big_f * t0 ** self.n
-        self.e = e
-
-
-_LCC = {
-    # RGF93 / Lambert-93 (France) — EPSG registry parameters
-    "EPSG:2154": LccParams(49.0, 44.0, 46.5, 3.0, 700000.0, 6600000.0),
-    # NAD83 / Statistics Canada Lambert
-    "EPSG:3347": LccParams(49.0, 77.0, 63.390675, -91.866667,
-                           6200000.0, 3000000.0),
-}
-
-
-def register_lcc(srs: str, params: LccParams) -> None:
-    """Register another LCC zone (State Plane, national grids)."""
-    _LCC[srs] = params
-
-
-def _to_lcc_factory(p: LccParams):
-    def _to_lcc(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        phi = y * F.lit(math.pi / 180.0)
-        sin_p = F.sin(phi)
-        # t(phi), Snyder 15-9
-        t = F.tan(F.lit(math.pi / 4.0) - phi / 2.0) / F.pow(
-            (F.lit(1.0) - F.lit(p.e) * sin_p)
-            / (F.lit(1.0) + F.lit(p.e) * sin_p),
-            F.lit(p.e / 2.0),
-        )
-        rho = F.lit(p.a * p.big_f) * F.pow(t, F.lit(p.n))
-        theta = F.lit(p.n) * (x - F.lit(p.lon0)) * F.lit(math.pi / 180.0)
-        easting = F.lit(p.fe) + rho * F.sin(theta)
-        northing = F.lit(p.fn) + F.lit(p.rho0) - rho * F.cos(theta)
-        ok = (
-            (F.abs(x - F.lit(p.lon0)) < F.lit(LCC_MAX_DLON_DEG))
-            & (F.abs(y) < F.lit(LCC_MAX_LAT_DEG))
-        )
-        return easting, northing, ok
-
-    return _to_lcc
-
-
-_TRANSFORMS = {
-    ("EPSG:4326", "EPSG:3857"): _to_3857,
-    ("EPSG:3857", "EPSG:4326"): _to_4326,
-}
-
-#: well-known EPSG codes resolved through the projpipeline step
-#: vocabulary (operators/projpipeline.py) — forward AND inverse come
-#: from the same step implementations via reverse_transfo.
-_EPSG_PIPE = {
+#: EPSG code -> PROJ operation from radian lon/lat (EPSG registry
+#: parameters).
+EPSG = {
+    # WGS 84 / Pseudo-Mercator (spherical formulas on the WGS 84 a)
+    "EPSG:3857": "+proj=webmerc +ellps=WGS84",
     # WGS 84 / World Mercator
     "EPSG:3395": "+proj=merc +ellps=WGS84",
+    # RGF93 / Lambert-93 (France)
+    "EPSG:2154": ("+proj=lcc +lat_1=49 +lat_2=44 +lat_0=46.5 +lon_0=3 "
+                  "+x_0=700000 +y_0=6600000 +ellps=GRS80"),
+    # NAD83 / Statistics Canada Lambert
+    "EPSG:3347": ("+proj=lcc +lat_1=49 +lat_2=77 +lat_0=63.390675 "
+                  "+lon_0=-91.866667 +x_0=6200000 +y_0=3000000 "
+                  "+ellps=GRS80"),
     # NAD83 / Conus Albers (the US national equal-area grid)
     "EPSG:5070": ("+proj=aea +lat_1=29.5 +lat_2=45.5 +lat_0=23 "
                   "+lon_0=-96 +ellps=GRS80"),
@@ -225,68 +47,34 @@ _EPSG_PIPE = {
                    "+y_0=2000000 +ellps=WGS84"),
 }
 
-
-def _pipe_transform_factory(op: str, reverse: bool):
-    from pdal_spark.operators import projpipeline as _pp
-
-    steps = _pp.parse_pipeline(
-        "+proj=pipeline +step +proj=unitconvert +xy_in=deg "
-        "+xy_out=rad +step " + op)
-
-    def _fn(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        nx, ny, _, ok = _pp._apply(
-            _pp._ColB, steps, x, y, F.lit(0.0), reverse)
-        return nx, ny, ok
-
-    return _fn
+_FROM_DEG = ("+proj=pipeline +step +proj=unitconvert +xy_in=deg "
+             "+xy_out=rad +step ")
 
 
-def _pipe_transform_sql(op: str, reverse: bool, x: str, y: str):
-    from pdal_spark.operators import projpipeline as _pp
-
-    steps = _pp.parse_pipeline(
-        "+proj=pipeline +step +proj=unitconvert +xy_in=deg "
-        "+xy_out=rad +step " + op)
-    nx, ny, _, ok = _pp._apply(
-        _pp._SqlB, steps, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"), reverse)
-    return nx.s, ny.s, _pp._Sx._c(ok)
-
-
-def _from_utm_factory(zone: int, north: bool):
-    """UTM -> WGS84 lon/lat (degrees): the inverse transverse-Mercator
-    series (Snyder 8-18..8-25) shared with the projpipeline step
-    vocabulary — written once in operators/projpipeline.py and
-    instantiated here on the Column backend."""
-    from pdal_spark.operators import projpipeline as _pp
-
-    p = {"zone": zone, "south": not north, "ellps": "WGS84"}
-
-    def _from_utm(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam, phi, _, ok = _pp._utm(
-            _pp._ColB, p, x, y, F.lit(0.0), inverse=True)
-        d = 180.0 / math.pi
-        return lam * F.lit(d), phi * F.lit(d), ok
-
-    return _from_utm
+def _operation(srs: str) -> str | None:
+    """The table row for srs, or the UTM operation for EPSG:326zz /
+    EPSG:327zz; None for anything else."""
+    if srs in EPSG:
+        return EPSG[srs]
+    code = srs[5:] if srs.startswith("EPSG:") else ""
+    if len(code) == 5 and code[:3] in ("326", "327") and code.isdigit():
+        zone = int(code[3:])
+        if 1 <= zone <= 60:
+            south = " +south" if code[:3] == "327" else ""
+            return f"+proj=utm +zone={zone}{south} +ellps=WGS84"
+    return None
 
 
-def _from_lcc_factory(p: LccParams):
-    """LCC -> WGS84/GRS80 lon/lat (degrees): the closed-form inverse
-    (Snyder 15-9..15-11 + conformal-latitude series) shared with the
-    projpipeline lcc step, instantiated on the Column backend."""
-    from pdal_spark.operators import projpipeline as _pp
-
-    prm = {"lat_1": p.lat1, "lat_2": p.lat2, "lat_0": p.lat0,
-           "lon_0": p.lon0, "x_0": p.fe, "y_0": p.fn,
-           "a": p.a, "es": p.e2}
-
-    def _from_lcc(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam, phi, _, _ = _pp._lcc(
-            _pp._ColB, prm, x, y, F.lit(0.0), inverse=True)
-        d = 180.0 / math.pi
-        return lam * F.lit(d), phi * F.lit(d), F.lit(True)
-
-    return _from_lcc
+def resolve(in_srs: str, out_srs: str) -> tuple[str, bool]:
+    """(in_srs, out_srs) -> (coord_op, reverse_transfo): the degree
+    lon/lat -> grid operation, run backwards when out_srs is 4326."""
+    if in_srs == "EPSG:4326" and (op := _operation(out_srs)):
+        return _FROM_DEG + op, False
+    if out_srs == "EPSG:4326" and (op := _operation(in_srs)):
+        return _FROM_DEG + op, True
+    raise ValueError(
+        f"no built-in transform {in_srs} -> {out_srs}; express other "
+        f"operations as a filters.projpipeline coord_op")
 
 
 def reproject(
@@ -299,204 +87,19 @@ def reproject(
     """Transform (x, y) from in_srs to out_srs, dropping failed rows."""
     if in_srs == out_srs:
         return df
-    fn = _TRANSFORMS.get((in_srs, out_srs))
-    if fn is None and in_srs == "EPSG:4326":
-        utm = _utm_zone(out_srs)
-        if utm is not None:
-            fn = _to_utm_factory(*utm)
-        elif out_srs in _LCC:
-            fn = _to_lcc_factory(_LCC[out_srs])
-    if fn is None and out_srs == "EPSG:4326":
-        utm = _utm_zone(in_srs)
-        if utm is not None:
-            fn = _from_utm_factory(*utm)
-        elif in_srs in _LCC:
-            fn = _from_lcc_factory(_LCC[in_srs])
-    if fn is None and in_srs == "EPSG:4326" and out_srs in _EPSG_PIPE:
-        fn = _pipe_transform_factory(_EPSG_PIPE[out_srs], False)
-    if fn is None and out_srs == "EPSG:4326" and in_srs in _EPSG_PIPE:
-        fn = _pipe_transform_factory(_EPSG_PIPE[in_srs], True)
-    if fn is None:
-        raise ValueError(
-            f"no built-in transform {in_srs} -> {out_srs}; register a "
-            f"vectorized kernel (pyproj) for arbitrary CRS pairs"
-        )
-    nx, ny, ok = fn(F.col(x), F.col(y))
-    return (
-        df.withColumn("_ok", ok)
-        .filter(F.col("_ok"))
-        .withColumns({x: nx, y: ny})
-        .drop("_ok")
-    )
+    op, reverse = resolve(in_srs, out_srs)
+    return projpipeline(df, op, reverse_transfo=reverse, x=x, y=y)
 
 
 def reproject_sql(in_srs: str, out_srs: str, x: str = "x", y: str = "y"):
     """(x_sql, y_sql, where_sql) twins for the DuckDB oracle."""
-    if (in_srs, out_srs) == ("EPSG:4326", "EPSG:3857"):
-        xs = f"({x} * {math.pi / 180.0!r} * {R!r})"
-        ys = f"(ln(tan({math.pi / 4.0!r} + {y} * {math.pi / 360.0!r})) * {R!r})"
-        w = f"({y} > {-MERC_MAX_LAT_DEG!r} AND {y} < {MERC_MAX_LAT_DEG!r})"
-        return xs, ys, w
-    if (in_srs, out_srs) == ("EPSG:3857", "EPSG:4326"):
-        xs = f"({x} / {R!r} * {180.0 / math.pi!r})"
-        ys = f"((atan(exp({y} / {R!r})) * 2.0 - {math.pi / 2.0!r}) * {180.0 / math.pi!r})"
-        return xs, ys, "TRUE"
-    if in_srs == "EPSG:4326":
-        utm = _utm_zone(out_srs)
-        if utm is not None:
-            zone, north = utm
-            lon0 = math.radians(-183.0 + 6.0 * zone)
-            lam = f"({x} * {math.pi / 180.0!r})"
-            phi = f"({y} * {math.pi / 180.0!r})"
-            sp, cp, tp = f"sin({phi})", f"cos({phi})", f"tan({phi})"
-            nr = f"({_A_WGS84!r} / sqrt(1.0 - {_E2!r} * {sp} * {sp}))"
-            t = f"({tp} * {tp})"
-            c = f"({_EP2!r} * {cp} * {cp})"
-            a_ = f"(({lam} - {lon0!r}) * {cp})"
-            m = (
-                f"({_A_WGS84!r} * ({_M0!r} * {phi} - {_M2!r} * sin({phi} * 2.0)"
-                f" + {_M4!r} * sin({phi} * 4.0) - {_M6!r} * sin({phi} * 6.0)))"
-            )
-            xs = (
-                f"(500000.0 + {_K0!r} * {nr} * ({a_}"
-                f" + (1.0 - {t} + {c}) * power({a_}, 3) / 6.0"
-                f" + (5.0 - {t} * 18.0 + {t} * {t} + {c} * 72.0"
-                f" - {58.0 * _EP2!r}) * power({a_}, 5) / 120.0))"
-            )
-            fn0 = 0.0 if north else 10000000.0
-            ys = (
-                f"({fn0!r} + {_K0!r} * ({m} + {nr} * {tp} * ("
-                f"power({a_}, 2) / 2.0"
-                f" + (5.0 - {t} + {c} * 9.0 + {c} * {c} * 4.0)"
-                f" * power({a_}, 4) / 24.0"
-                f" + (61.0 - {t} * 58.0 + {t} * {t} + {c} * 600.0"
-                f" - {330.0 * _EP2!r}) * power({a_}, 6) / 720.0)))"
-            )
-            w = (
-                f"(abs({x} - {math.degrees(lon0)!r}) < {UTM_MAX_DLON_DEG!r}"
-                f" AND {y} > {-MERC_MAX_LAT_DEG!r} AND {y} < {MERC_MAX_LAT_DEG!r})"
-            )
-            return xs, ys, w
-        if out_srs in _LCC:
-            p = _LCC[out_srs]
-            phi = f"({y} * {math.pi / 180.0!r})"
-            sp = f"sin({phi})"
-            t = (
-                f"(tan({math.pi / 4.0!r} - {phi} / 2.0)"
-                f" / power((1.0 - {p.e!r} * {sp}) / (1.0 + {p.e!r} * {sp}),"
-                f" {p.e / 2.0!r}))"
-            )
-            rho = f"({p.a * p.big_f!r} * power({t}, {p.n!r}))"
-            th = f"({p.n!r} * ({x} - {p.lon0!r}) * {math.pi / 180.0!r})"
-            xs_ = f"({p.fe!r} + {rho} * sin({th}))"
-            ys_ = f"({p.fn!r} + {p.rho0!r} - {rho} * cos({th}))"
-            w = (
-                f"(abs({x} - {p.lon0!r}) < {LCC_MAX_DLON_DEG!r}"
-                f" AND abs({y}) < {LCC_MAX_LAT_DEG!r})"
-            )
-            return xs_, ys_, w
-    if out_srs == "EPSG:4326":
-        utm = _utm_zone(in_srs)
-        d = repr(180.0 / math.pi)
-        if utm is not None:
-            from pdal_spark.operators import projpipeline as _pp
-
-            zone, north = utm
-            p = {"zone": zone, "south": not north, "ellps": "WGS84"}
-            lam, phi, _, ok = _pp._utm(
-                _pp._SqlB, p, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"),
-                inverse=True)
-            return f"({lam.s} * {d})", f"({phi.s} * {d})", ok.s
-        if in_srs in _LCC:
-            from pdal_spark.operators import projpipeline as _pp
-
-            lp = _LCC[in_srs]
-            prm = {"lat_1": lp.lat1, "lat_2": lp.lat2, "lat_0": lp.lat0,
-                   "lon_0": lp.lon0, "x_0": lp.fe, "y_0": lp.fn,
-                   "a": lp.a, "es": lp.e2}
-            lam, phi, _, _ = _pp._lcc(
-                _pp._SqlB, prm, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"),
-                inverse=True)
-            return f"({lam.s} * {d})", f"({phi.s} * {d})", "TRUE"
-    if in_srs == "EPSG:4326" and out_srs in _EPSG_PIPE:
-        return _pipe_transform_sql(_EPSG_PIPE[out_srs], False, x, y)
-    if out_srs == "EPSG:4326" and in_srs in _EPSG_PIPE:
-        return _pipe_transform_sql(_EPSG_PIPE[in_srs], True, x, y)
-    raise ValueError((in_srs, out_srs))
+    op, reverse = resolve(in_srs, out_srs)
+    xs, ys, _, where = pipeline_sql(op, reverse, x=x, y=y)
+    return xs, ys, where
 
 
 def reproject_np(xs, ys, in_srs: str = "EPSG:4326", out_srs: str = "EPSG:3857"):
-    """numpy oracle."""
-    import numpy as np
-
-    if (in_srs, out_srs) == ("EPSG:4326", "EPSG:3857"):
-        ok = (ys > -MERC_MAX_LAT_DEG) & (ys < MERC_MAX_LAT_DEG)
-        mx = xs * (math.pi / 180.0) * R
-        my = np.log(np.tan(math.pi / 4.0 + ys * (math.pi / 360.0))) * R
-        return mx[ok], my[ok], ok
-    utm = _utm_zone(out_srs) if in_srs == "EPSG:4326" else None
-    if utm is not None:
-        zone, north = utm
-        lon0 = math.radians(-183.0 + 6.0 * zone)
-        lam, phi = np.radians(xs), np.radians(ys)
-        sp, cp, tp = np.sin(phi), np.cos(phi), np.tan(phi)
-        nr = _A_WGS84 / np.sqrt(1.0 - _E2 * sp * sp)
-        t, c = tp * tp, _EP2 * cp * cp
-        a_ = (lam - lon0) * cp
-        m = _A_WGS84 * (
-            _M0 * phi - _M2 * np.sin(2 * phi) + _M4 * np.sin(4 * phi)
-            - _M6 * np.sin(6 * phi)
-        )
-        e = 500000.0 + _K0 * nr * (
-            a_ + (1 - t + c) * a_**3 / 6.0
-            + (5 - 18 * t + t * t + 72 * c - 58 * _EP2) * a_**5 / 120.0
-        )
-        n = (0.0 if north else 10000000.0) + _K0 * (
-            m + nr * tp * (
-                a_**2 / 2.0 + (5 - t + 9 * c + 4 * c * c) * a_**4 / 24.0
-                + (61 - 58 * t + t * t + 600 * c - 330 * _EP2) * a_**6 / 720.0
-            )
-        )
-        ok = (
-            (np.abs(xs - math.degrees(lon0)) < UTM_MAX_DLON_DEG)
-            & (ys > -MERC_MAX_LAT_DEG) & (ys < MERC_MAX_LAT_DEG)
-        )
-        return e[ok], n[ok], ok
-    if in_srs == "EPSG:4326" and out_srs in _LCC:
-        p = _LCC[out_srs]
-        phi = np.radians(ys)
-        sp = np.sin(phi)
-        t = np.tan(math.pi / 4.0 - phi / 2.0) / np.power(
-            (1.0 - p.e * sp) / (1.0 + p.e * sp), p.e / 2.0
-        )
-        rho = p.a * p.big_f * np.power(t, p.n)
-        th = p.n * np.radians(xs - p.lon0)
-        e = p.fe + rho * np.sin(th)
-        n = p.fn + p.rho0 - rho * np.cos(th)
-        ok = (np.abs(xs - p.lon0) < LCC_MAX_DLON_DEG) & (
-            np.abs(ys) < LCC_MAX_LAT_DEG
-        )
-        return e[ok], n[ok], ok
-    raise ValueError((in_srs, out_srs))
-
-
-def proj_pipeline(
-    df: DataFrame, steps, x: str = "x", y: str = "y"
-) -> DataFrame:
-    """filters.projpipeline (ProjPipelineFilter.cpp:60-121): apply a
-    CHAIN of coordinate operations in order with per-stage
-    drop-on-failure semantics.
-
-    steps = a real PROJ pipeline STRING ("+proj=pipeline +step ..."),
-    handled by operators/projpipeline.py's closed-form step
-    vocabulary, or the legacy registered-pair form
-    [(in_srs, out_srs), ...] — e.g. 3857 -> 4326 -> UTM 31N.
-    """
-    if isinstance(steps, str):
-        from pdal_spark.operators.projpipeline import projpipeline
-
-        return projpipeline(df, steps, x=x, y=y)
-    out = df
-    for in_srs, out_srs in steps:
-        out = reproject(out, in_srs, out_srs, x=x, y=y)
-    return out
+    """numpy oracle -> (x of kept rows, y of kept rows, keep mask)."""
+    op, reverse = resolve(in_srs, out_srs)
+    nx, ny, _, ok = pipeline_np(op, xs, ys, reverse_transfo=reverse)
+    return nx[ok], ny[ok], ok

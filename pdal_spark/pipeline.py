@@ -456,12 +456,15 @@ def _f_reprojection(spark, inputs, o, filename):
 
 def _f_projpipeline(spark, inputs, o, filename):
     """filters.projpipeline (ProjPipelineFilter.cpp:66-76): coord_op
-    pipeline string + reverse_transfo flag."""
+    pipeline string + reverse_transfo flag.  Like the reference it
+    transforms (X, Y, Z): a z column goes through the chain."""
     from pdal_spark.operators.projpipeline import projpipeline
 
+    df = _one(inputs, "projpipeline")
     return projpipeline(
-        _one(inputs, "projpipeline"), o["coord_op"],
-        reverse_transfo=bool(o.get("reverse_transfo", False)))
+        df, o["coord_op"],
+        reverse_transfo=bool(o.get("reverse_transfo", False)),
+        z="z" if "z" in df.columns else None)
 
 
 def _f_smrf(spark, inputs, o, filename):

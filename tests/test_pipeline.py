@@ -381,6 +381,38 @@ def test_pmf_stage(spark):
     assert out.count() == 1065 and classes <= {1, 2} and 2 in classes
 
 
+def test_projpipeline_stage_transforms_z(spark, tmp_path):
+    """filters.projpipeline carries z through the chain: a geocentric
+    datum shift (cart -> helmert -> inverse cart) moves the height, and
+    the horizontal result depends on the input height."""
+    import numpy as np
+
+    from pdal_spark.operators.projpipeline import pipeline_np
+
+    op = ("+proj=pipeline +step +proj=unitconvert +xy_in=deg +xy_out=rad "
+          "+step +proj=cart +ellps=WGS84 "
+          "+step +proj=helmert +x=-87.0 +y=-96.0 +z=-120.0 "
+          "+step +inv +proj=cart +ellps=intl "
+          "+step +proj=unitconvert +xy_in=rad +xy_out=deg")
+    rng = np.random.default_rng(4)
+    xs = rng.uniform(-10.0, 30.0, 50)
+    ys = rng.uniform(35.0, 60.0, 50)
+    zs = rng.uniform(100.0, 4000.0, 50)
+    path = tmp_path / "pts.csv"
+    path.write_text("page_id,x,y,z\n" + "".join(
+        f"{i},{x!r},{y!r},{z!r}\n" for i, (x, y, z) in
+        enumerate(zip(xs, ys, zs))))
+    doc = [{"type": "readers.text", "filename": str(path)},
+           {"type": "filters.projpipeline", "coord_op": op}]
+    out = pl.run(spark, doc).toPandas().sort_values("page_id")
+    ex, ey, ez, ok = pipeline_np(op, xs, ys, zs)
+    assert ok.all() and len(out) == 50
+    np.testing.assert_allclose(out.x.values, ex, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(out.y.values, ey, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(out.z.values, ez, rtol=0, atol=1e-6)
+    assert np.abs(ez - zs).min() > 1.0
+
+
 def test_reprojection_and_projpipeline_stages(spark):
     """filters.reprojection + filters.projpipeline as pipeline stages:
     forward to UTM 31N, then the reference's coord_op shape (inverse

@@ -413,7 +413,7 @@ def test_lcc_forward_matches_registered_family():
 def test_lcc_inverse_roundtrip_both_hemispheres():
     """Inverse lcc (Snyder 15-9..15-11 + the conformal-latitude
     series) closes to ~1e-10 deg, northern AND southern (n < 0)
-    parallels."""
+    parallels, and on a tangent (one-parallel) cone."""
     rng = np.random.default_rng(6)
     lon = rng.uniform(-2, 8, 800)
     lat = rng.uniform(42, 51, 800)
@@ -431,6 +431,16 @@ def test_lcc_inverse_roundtrip_both_hemispheres():
     lo3, la3, _, _ = pp.pipeline_np(south, xs, ys, reverse_transfo=True)
     np.testing.assert_allclose(lo3, lon3, atol=1e-10)
     np.testing.assert_allclose(la3, lat3, atol=1e-9)
+    # one standard parallel (lat_2 defaults to lat_1): the tangent cone
+    tangent = ("+proj=pipeline +step +proj=unitconvert +xy_in=deg "
+               "+xy_out=rad +step +proj=lcc +lat_1=40 +lat_0=40 +lon_0=-100 "
+               "+ellps=GRS80")
+    xt, yt, _, _ = pp.pipeline_np(tangent, [-100.0], [40.0])
+    np.testing.assert_allclose([xt[0], yt[0]], [0.0, 0.0], atol=1e-6)
+    xs, ys, _, _ = pp.pipeline_np(tangent, lon3 - 240.0, -lat3)
+    lo4, la4, _, _ = pp.pipeline_np(tangent, xs, ys, reverse_transfo=True)
+    np.testing.assert_allclose(lo4, lon3 - 240.0, atol=1e-10)
+    np.testing.assert_allclose(la4, -lat3, atol=1e-9)
 
 
 def test_lcc_sql_backend_in_duckdb():
@@ -663,6 +673,46 @@ def test_reproject_wellknown_epsg_codes(spark):
                                    err_msg=code)
         np.testing.assert_allclose(back.y.values, lat, atol=tol,
                                    err_msg=code)
+
+
+def test_world_mercator_keeps_rows_up_to_the_pole(spark):
+    """EPSG:3395 (ellipsoidal merc) drops only at the pole, where ln t
+    diverges; PROJ transforms lat 89 too.  Web Mercator keeps its
+    square-world edge."""
+    from pdal_spark.operators.reprojection import reproject, reproject_np
+
+    lat = np.array([89.0, -89.0, 90.0, -90.0, 85.3])
+    lon = np.array([10.0, -20.0, 30.0, -40.0, 50.0])
+    pdf = pd.DataFrame({"id": np.arange(5), "x": lon, "y": lat})
+    got = reproject(spark.createDataFrame(pdf), "EPSG:4326", "EPSG:3395")
+    assert sorted(r.id for r in got.collect()) == [0, 1, 4]
+    _, y, ok = reproject_np(lon, lat, "EPSG:4326", "EPSG:3395")
+    assert list(np.nonzero(ok)[0]) == [0, 1, 4] and np.isfinite(y).all()
+    _, _, ok = reproject_np(lon, lat, "EPSG:4326", "EPSG:3857")
+    assert not ok.any()
+
+
+def test_polar_stere_inverse_returns_input_longitude(spark):
+    """EPSG:3413 has lon_0 = -45, so near the antimeridian the inverse
+    sums to beyond +-180.  The inverse normalises into (-180, 180], so
+    the round trip gives the input longitude itself, not modulo 360."""
+    from pdal_spark.operators.reprojection import reproject
+
+    rng = np.random.default_rng(21)
+    lon = np.concatenate([rng.uniform(170.0, 180.0, 100),
+                          rng.uniform(-180.0, -170.0, 100),
+                          [170.0, 175.0, -175.0, -170.0]])
+    lat = rng.uniform(60.0, 85.0, lon.size)
+    pdf = pd.DataFrame({"id": np.arange(lon.size), "x": lon, "y": lat})
+    fwd = reproject(spark.createDataFrame(pdf), "EPSG:4326", "EPSG:3413")
+    back = reproject(fwd, "EPSG:3413", "EPSG:4326").orderBy("id").toPandas()
+    assert len(back) == lon.size
+    np.testing.assert_allclose(back.x.values, lon, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(back.y.values, lat, rtol=0, atol=1e-9)
+    op = "+proj=stere +lat_0=-90 +lat_ts=-70 +lon_0=120 +ellps=WGS84"
+    x, y, _, _ = pp.pipeline_np(op, np.radians(lon), -np.radians(lat))
+    lo, _, _, _ = pp.pipeline_np(op, x, y, reverse_transfo=True)
+    np.testing.assert_allclose(np.degrees(lo), lon, rtol=0, atol=1e-9)
 
 
 def test_reproject_sql_wellknown_epsg_twin():

@@ -43,9 +43,7 @@ def test_roundtrip_identity(spark):
 
 def test_unknown_pair_raises(spark):
     df = synth.synth_points(spark, 5)
-    # UTM zones and the LCC registry are built-in now — an unregistered
-    # projected CRS (OSGB, EPSG:27700) still routes to the pyproj-
-    # kernel error
+    # a projected CRS outside the EPSG table (OSGB, EPSG:27700) raises
     with pytest.raises(ValueError, match="no built-in transform"):
         rp.reproject(df, "EPSG:4326", "EPSG:27700")
 
@@ -63,7 +61,9 @@ def test_utm_meridian_arc_independent_oracle():
 
     from pdal_spark.operators import reprojection as rp
 
-    a, e2 = 6378137.0, rp._E2
+    # WGS 84 ellipsoid
+    a, f = 6378137.0, 1.0 / 298.257223563
+    e2 = f * (2.0 - f)
 
     def arc(phi_deg):
         t = np.linspace(0, math.radians(phi_deg), 400001)
@@ -120,9 +120,9 @@ def test_utm_south_zone_false_northing():
 
 
 def test_proj_pipeline_chain(spark):
-    """projpipeline: 4326 -> 3857 -> 4326 -> UTM31N chain equals the
-    direct UTM transform (round-trip via Mercator is closed-form exact
-    up to fp)."""
+    """4326 -> 3857 -> 4326 -> UTM31N chained through reproject equals
+    the direct UTM transform (round-trip via Mercator is closed-form
+    exact up to fp)."""
     import numpy as np
     import pandas as pd
 
@@ -131,14 +131,17 @@ def test_proj_pipeline_chain(spark):
     ids = np.arange(200)
     xs, ys = geo_mod.geocode_lcg_np(ids)
     df = spark.createDataFrame(pd.DataFrame({"page_id": ids, "x": xs, "y": ys}))
-    chained = rp.proj_pipeline(
-        df, [("EPSG:4326", "EPSG:3857"), ("EPSG:3857", "EPSG:4326"),
-             ("EPSG:4326", "EPSG:32631")]
-    ).toPandas().sort_values("page_id")
+    chained = df
+    for in_srs, out_srs in [("EPSG:4326", "EPSG:3857"),
+                            ("EPSG:3857", "EPSG:4326"),
+                            ("EPSG:4326", "EPSG:32631")]:
+        chained = rp.reproject(chained, in_srs, out_srs)
+    chained = chained.toPandas().sort_values("page_id")
     direct = rp.reproject(df, "EPSG:4326", "EPSG:32631") \
         .toPandas().sort_values("page_id")
-    # chained drops |lat|>=85.05 rows first (Mercator stage), direct does
-    # too (UTM ok-gate includes the same cutoff) -> same row set
+    # the Mercator stage drops |lat| >= 85.05 first; the geocoded points
+    # have none of those and none in the 85.05-85.5 band the UTM guard
+    # keeps, so both paths keep the same rows
     assert list(chained.page_id) == list(direct.page_id)
     np.testing.assert_allclose(chained.x, direct.x, atol=1e-6)
     np.testing.assert_allclose(chained.y, direct.y, atol=1e-6)
@@ -158,8 +161,10 @@ def test_lcc_scale_factor_independent_oracle():
 
     import numpy as np
 
-    p = rp._LCC["EPSG:2154"]
-    a, e2 = p.a, p.e2
+    # Lambert-93: GRS80, standard parallels 44 and 49, lon_0 3
+    a, f = 6378137.0, 1.0 / 298.257222101
+    e2 = f * (2.0 - f)
+    lon0, lat1, lat2 = 3.0, 49.0, 44.0
 
     def arc(lo, hi):
         t = np.linspace(math.radians(lo), math.radians(hi), 200001)
@@ -169,18 +174,18 @@ def test_lcc_scale_factor_independent_oracle():
     def k_at(lat):
         d = 0.001
         (e1, n1, _) = rp.reproject_np(
-            np.array([p.lon0]), np.array([lat - d / 2]),
+            np.array([lon0]), np.array([lat - d / 2]),
             "EPSG:4326", "EPSG:2154")
         (e2_, n2, _) = rp.reproject_np(
-            np.array([p.lon0]), np.array([lat + d / 2]),
+            np.array([lon0]), np.array([lat + d / 2]),
             "EPSG:4326", "EPSG:2154")
         proj = math.hypot(e2_[0] - e1[0], n2[0] - n1[0])
         return proj / arc(lat - d / 2, lat + d / 2)
 
-    assert abs(k_at(p.lat1) - 1.0) < 1e-6
-    assert abs(k_at(p.lat2) - 1.0) < 1e-6
-    assert k_at((p.lat1 + p.lat2) / 2) < 1.0 - 1e-5
-    assert k_at(max(p.lat1, p.lat2) + 4.0) > 1.0 + 1e-5
+    assert abs(k_at(lat1) - 1.0) < 1e-6
+    assert abs(k_at(lat2) - 1.0) < 1e-6
+    assert k_at((lat1 + lat2) / 2) < 1.0 - 1e-5
+    assert k_at(max(lat1, lat2) + 4.0) > 1.0 + 1e-5
 
 
 def test_lcc_anchors_and_known_point():
@@ -188,13 +193,14 @@ def test_lcc_anchors_and_known_point():
     exactly; Paris lands on its published Lambert-93 coordinate."""
     import numpy as np
 
-    p = rp._LCC["EPSG:2154"]
-    e, n, _ = rp.reproject_np(np.array([p.lon0]), np.array([p.lat0]),
+    # Lambert-93 natural origin and false easting/northing
+    lon0, lat0, fe, fn = 3.0, 46.5, 700000.0, 6600000.0
+    e, n, _ = rp.reproject_np(np.array([lon0]), np.array([lat0]),
                               "EPSG:4326", "EPSG:2154")
-    assert abs(e[0] - p.fe) < 1e-6 and abs(n[0] - p.fn) < 1e-6
-    e, n, _ = rp.reproject_np(np.array([p.lon0]), np.array([41.7]),
+    assert abs(e[0] - fe) < 1e-6 and abs(n[0] - fn) < 1e-6
+    e, n, _ = rp.reproject_np(np.array([lon0]), np.array([41.7]),
                               "EPSG:4326", "EPSG:2154")
-    assert abs(e[0] - p.fe) < 1e-6
+    assert abs(e[0] - fe) < 1e-6
     # Paris (2.3522 E, 48.8566 N) ~ (652470, 6862035) in Lambert-93
     e, n, _ = rp.reproject_np(np.array([2.3522]), np.array([48.8566]),
                               "EPSG:4326", "EPSG:2154")
@@ -231,22 +237,30 @@ def test_lcc_spark_matches_numpy_and_sql(spark):
     np.testing.assert_allclose(out["y"].to_numpy(), ora["y"], rtol=1e-12)
 
 
-def test_lcc_register_new_zone(spark):
-    """register_lcc proves the seam: a State-Plane-style custom zone
-    routes through the same engine."""
-    import numpy as np
+def test_drop_guards(spark):
+    """One drop guard per family, the same through every front end:
+    UTM keeps |lat| < 85.5 (PROJ's tmerc succeeds there), LCC keeps
+    |dlon| < 90 and |lat| < 89.5, and 3857 keeps its square-world edge
+    at 85.0511."""
+    import duckdb
+    import pandas as pd
 
-    rp.register_lcc("TEST:SP1", rp.LccParams(
-        33.0, 45.0, 39.0, -96.0, 0.0, 0.0))
-    try:
-        e, n, _ = rp.reproject_np(np.array([-96.0]), np.array([39.0]),
-                                  "EPSG:4326", "TEST:SP1")
-        assert abs(e[0]) < 1e-6 and abs(n[0]) < 1e-6
-        df = spark.createDataFrame([(0, -95.0, 40.0)],
-                                   "page_id long, x double, y double")
-        got = rp.reproject(df, "EPSG:4326", "TEST:SP1").collect()[0]
-        e2_, n2_, _ = rp.reproject_np(np.array([-95.0]), np.array([40.0]),
-                                      "EPSG:4326", "TEST:SP1")
-        assert abs(got.x - e2_[0]) < 1e-6 and abs(got.y - n2_[0]) < 1e-6
-    finally:
-        rp._LCC.pop("TEST:SP1", None)
+    cases = {"EPSG:32631": [(3.0, 85.3, True), (3.0, 85.6, False)],
+             "EPSG:2154": [(78.0, 46.0, True), (3.0, 89.6, False)],
+             "EPSG:3857": [(0.0, 85.0, True), (0.0, 85.1, False)]}
+    con = duckdb.connect()
+    for code, rows in cases.items():
+        pdf = pd.DataFrame({"page_id": range(len(rows)),
+                            "x": [r[0] for r in rows],
+                            "y": [r[1] for r in rows]})
+        want = [i for i, r in enumerate(rows) if r[2]]
+        got = rp.reproject(spark.createDataFrame(pdf), "EPSG:4326", code)
+        assert sorted(r.page_id for r in got.collect()) == want, code
+        _, _, ok = rp.reproject_np(pdf.x.values, pdf.y.values,
+                                   "EPSG:4326", code)
+        assert list(np.nonzero(ok)[0]) == want, code
+        _, _, w = rp.reproject_sql("EPSG:4326", code)
+        con.register("pts", pdf)
+        kept = con.sql(f"SELECT page_id FROM pts WHERE {w} "
+                       f"ORDER BY page_id").df()
+        assert list(kept.page_id) == want, code
